@@ -105,15 +105,9 @@ class ImdbEngine:
     ) -> tuple[list[str], list[tuple[str, str, int]]]:
         """The flagship query, reference reply shape ``{Vertices, Edges}``
         (``master.erl:263``): display-sorted vertices + (src, dst, level)
-        edges. Collects — the result is bounded by the ``max_vertices``
+        edges. One collect — the result is bounded by the ``max_vertices``
         budget (pass ``None`` for an explicitly unbounded batch use)."""
-        res = self.request_df(name, node_type, level, max_vertices)
-        vertices = graph_export.sorted_vertices(res)
-        edges = [
-            (r["src"], r["dst"], r["level"])
-            for r in res.edges.orderBy("level", "src", "dst").collect()
-        ]
-        return vertices, edges
+        return graph_export.fetch(self.request_df(name, node_type, level, max_vertices))
 
     def request_df(
         self,
@@ -145,8 +139,11 @@ class ImdbEngine:
 
     def to_dot(self, name: str, node_type: str = "actor", level: int = 2) -> str:
         """DOT text of the request graph (reference's PNG pipeline minus
-        the GraphViz shell-out, which stays outside the engine)."""
-        return graph_export.to_dot(self.request_df(name, node_type, level))
+        the GraphViz shell-out, which stays outside the engine), under the
+        same vertex budget as :meth:`request`."""
+        return graph_export.to_dot(
+            self.request_df(name, node_type, level, self.REQUEST_MAX_VERTICES)
+        )
 
     def unpersist(self) -> None:
         self.cast_edges.unpersist()

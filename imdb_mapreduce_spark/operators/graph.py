@@ -33,6 +33,7 @@ is the durable analog of the reference keeping both adjacency directions
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -97,12 +98,15 @@ def _bfs_rounds(
     frontier_rows = 1
     visited = frontier
     visited_rows = 1
-    # node domain follows the root's Python type (string for name graphs,
-    # long for id graphs — the id form keeps bucketed layouts usable)
-    node_sql = "string" if isinstance(root, str) else "bigint"
-    result_edges = spark.createDataFrame(
-        [], f"src {node_sql}, dst {node_sql}, level int"
-    )
+    # The empty base of the result takes the frontier's node type (string
+    # for name graphs, bigint for id graphs — the id form keeps bucketed
+    # layouts usable) and is pruned by the optimizer. Built from a Python
+    # list instead, it would be a Python RDD whose scan runs Python-worker
+    # tasks in every fetch of the result; this way a level-1 result is
+    # fetched without any Spark job.
+    result_edges = frontier.select(
+        F.col("node").alias("src"), F.col("node").alias("dst"), F.lit(0).alias("level")
+    ).limit(0)
 
     for lvl in range(1, level):
         pairs, est_candidates = expand(frontier, frontier_rows)
@@ -158,6 +162,19 @@ class BfsResult:
     node_type: str
     edges: DataFrame  # (src, dst, level)
     vertices: DataFrame  # (name,)
+
+
+def _avg_degree(edges: DataFrame, node_col: str) -> float:
+    """Average out-degree of ``node_col`` — the frontier-size multiplier
+    behind the broadcast guards and the pre-join budget estimate. Callers
+    wrap it in ``functools.lru_cache`` so it runs at most once per traversal,
+    and only when a round needs it. One job, no shuffle of the edge table:
+    count + HLL sketch both fold map-side; only sketches cross the wire."""
+    stats = edges.agg(
+        F.count(F.lit(1)).alias("n_edges"),
+        F.approx_count_distinct(node_col).alias("n_nodes"),
+    ).collect()[0]
+    return stats["n_edges"] / max(1, stats["n_nodes"])
 
 
 def _two_hop(
@@ -247,23 +264,12 @@ def bipartite_bfs(
     retry with a higher budget if the fail-fast was too conservative.
     """
     spark = edges.sparkSession
-    stats_cache: list[float] = []  # lazy avg degree: count jobs only if needed
-
-    def _avg_degree() -> float:
-        if not stats_cache:
-            # One job, no shuffle of the edge table: count + HLL sketch
-            # both fold map-side; only sketches cross the wire.
-            stats = edges.agg(
-                F.count(F.lit(1)).alias("n_edges"),
-                F.approx_count_distinct(node_col).alias("n_nodes"),
-            ).collect()[0]
-            stats_cache.append(stats["n_edges"] / max(1, stats["n_nodes"]))
-        return stats_cache[0]
+    avg_degree = functools.lru_cache(maxsize=1)(lambda: _avg_degree(edges, node_col))
 
     # level k = k-1 expansion rounds (master.erl:259,271). Aggregate-
     # before-anti-join rationale lives in _bfs_rounds (shared machinery).
     def expand(frontier: DataFrame, frontier_rows: int):
-        deg = _avg_degree() if (frontier_rows > 1 or max_vertices) else None
+        deg = avg_degree() if (frontier_rows > 1 or max_vertices) else None
         hop1_estimate = frontier_rows * (deg if deg else 1.0)
         pairs = _two_hop(
             frontier,
@@ -329,16 +335,7 @@ def unipartite_bfs(
     ``BfsBudgetExceeded.estimated=True`` — the exact post-round check
     (``estimated=False``) remains authoritative."""
     spark = edges.sparkSession
-    stats_cache: list[float] = []
-
-    def _avg_degree() -> float:
-        if not stats_cache:
-            stats = edges.agg(
-                F.count(F.lit(1)).alias("n_edges"),
-                F.approx_count_distinct(src_col).alias("n_nodes"),
-            ).collect()[0]
-            stats_cache.append(stats["n_edges"] / max(1, stats["n_nodes"]))
-        return stats_cache[0]
+    avg_degree = functools.lru_cache(maxsize=1)(lambda: _avg_degree(edges, src_col))
 
     def expand(frontier: DataFrame, frontier_rows: int):
         f = frontier.select(F.col("node").alias("src"))
@@ -350,7 +347,7 @@ def unipartite_bfs(
             .filter(F.col("src") != F.col("dst"))
             .select("src", "dst")
         )
-        est = frontier_rows * _avg_degree() if max_vertices else None
+        est = frontier_rows * avg_degree() if max_vertices else None
         return pairs, est
 
     return _bfs_rounds(

@@ -1,25 +1,26 @@
-"""DOT/graph serialization of a BFS result (SURVEY.md §2.9 G3/G4, §2.1 K4).
+"""Driver-side fetch and DOT serialization of a BFS result (SURVEY.md
+§2.9 G3/G4, §2.1 K4).
 
-The reference materializes each request's digraph and renders it to PNG via
-GraphViz (``/root/reference/src/master/graphviz.erl:63-100``,
-``src/master/graph.erl:47-79``). Rendering (``dot -Tpng``) stays outside the
-engine; what we reproduce is the deterministic DOT text assembly:
+The reference master gathers the workers' replies into ``{Vertices, Edges}``
+(``master.erl:261-263``) and renders the digraph to PNG via GraphViz
+(the reference's ``src/master/graphviz.erl:63-100``, ``graph.erl:47-79``).
+Here :func:`fetch` is that gather: one ``collect()`` of the budget-bounded
+result edges; the vertex list and both orders are built on the driver.
+Rendering (``dot -Tpng``) stays outside the engine; the DOT text is:
 
 - node ids sanitized with ``[^A-Za-z0-9] → _`` — the reference's char class
   omits ``0`` (``graph.erl:30``), mangling names containing the digit zero;
   documented bug, not replicated;
-- movies listed in lexicographic order (O1, ``graph.erl:92``), actors by
-  surname = last space-separated token (O2, ``graph.erl:93-98``, scalar X6);
+- movies in lexicographic order (O1, ``graph.erl:92``), actors by surname =
+  last space-separated token (O2, ``graph.erl:93-98``, scalar X6), then name;
 - tree linearization: depth-first emission from the root (G3,
-  ``graph.erl:67-79``) — driver-side on the collected, bounded result.
+  ``graph.erl:67-79``).
 """
 
 from __future__ import annotations
 
 import re
 from collections import defaultdict
-
-from pyspark.sql import functions as F
 
 from imdb_mapreduce_spark.operators.graph import ACTOR, BfsResult
 
@@ -31,32 +32,35 @@ def sanitize_id(name: str) -> str:
     return _SANITIZE.sub("_", name)
 
 
-def _surname_key(name: str) -> str:
-    """Sort key = last space-separated token (X6, ``graph.erl:95-97``)."""
-    return name.rsplit(" ", 1)[-1]
+def _display_key(node_type: str):
+    """The one display-order rule: movies by name (O1), actors by
+    (surname, name) with surname = last space-separated token (O2, X6)."""
+    if node_type == ACTOR:
+        return lambda name: (name.rsplit(" ", 1)[-1], name)
+    return lambda name: name
 
 
-def sorted_vertices(result: BfsResult) -> list[str]:
-    """Display order: movies lexicographic (O1), actors by surname (O2).
-
-    Distributed sort with an expression key, then bounded collect — the
-    result graph is small by construction (bounded depth).
-    """
-    if result.node_type == ACTOR:
-        key = F.element_at(F.split(F.col("name"), " "), -1)
-    else:
-        key = F.col("name")
-    return [r[0] for r in result.vertices.orderBy(key, F.col("name")).collect()]
+def fetch(result: BfsResult) -> tuple[list[str], list[tuple[str, str, int]]]:
+    """The reply ``{Vertices, Edges}`` (``master.erl:263``): display-ordered
+    vertices and (src, dst, level) edges in (level, src, dst) order, from
+    at most one Spark job (none for a result without edges)."""
+    edges = sorted(
+        ((r["src"], r["dst"], r["level"]) for r in result.edges.collect()),
+        key=lambda e: (e[2], e[0], e[1]),
+    )
+    names = {result.root}.union(*((src, dst) for src, dst, _ in edges))
+    return sorted(names, key=_display_key(result.node_type)), edges
 
 
 def to_dot(result: BfsResult) -> str:
     """Assemble DOT text (G4) via DFS from the root (G3)."""
-    edges = result.edges.orderBy("level", "src", "dst").collect()
+    _, edges = fetch(result)
     children: dict[str, list[str]] = defaultdict(list)
-    for row in edges:
-        children[row["src"]].append(row["dst"])
+    for src, dst, _ in edges:
+        children[src].append(dst)
+    key = _display_key(result.node_type)
     for v in children.values():
-        v.sort(key=_surname_key if result.node_type == ACTOR else str)
+        v.sort(key=key)
 
     lines = ["digraph G {", f'  label="{result.root} (level graph)";']
     emitted: set[str] = set()
@@ -71,11 +75,7 @@ def to_dot(result: BfsResult) -> str:
             lines.append(f"  {nid} -> {sanitize_id(child)};")
             dfs(child)
 
-    dfs(result.root)
-    # Isolated vertices (root with no expansion) are still declared.
-    for name in sorted_vertices(result):
-        if name not in emitted:
-            lines.append(f'  {sanitize_id(name)} [label="{name}"];')
+    dfs(result.root)  # every vertex hangs off the root: the result is a tree
     lines.append("}")
     return "\n".join(lines)
 

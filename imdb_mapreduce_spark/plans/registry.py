@@ -68,6 +68,123 @@ def register(
 # Rotate these lists each round so coverage accumulates. See COVERAGE.md
 # ("Driver correctness window") for the per-round rotation record.
 _HEAD: tuple[str, ...] = (
+    "copurchase_bfs_l3",
+    "brand_top2_parts",
+    "user_running_stats_salted",
+    "inverted_index_postings",
+    "doc_chunk_windows",
+    "embedding_int8_quant",
+    "pricing_summary",
+    "revenue_topk",
+    "customers_without_orders",
+    "order_basket_lookup",
+    "nation_customer_sorted",
+    "asof_last_purchase",
+    "events_10min_windows",
+    "dedup_clusters",
+    "parts_above_brand_avg",
+    "doc_embedding_profile",
+    "supplier_part_facts",
+    "events_hourly",
+    "order_price_quantiles",
+    "region_rollup",
+    "token_pack_assignment",
+    "media_byte_histogram",
+    "token_count_bpe",
+    "doc_rarity_scores",
+    "tfidf_top_terms",
+    "part_expr_catalog",
+    "events_cube",
+    "pagerank_coparts",
+    "peak_concurrent_sessions",
+    "events_multires_rollup",
+    "event_value_histogram",
+    "user_sessions",
+    "events_json_stats",
+    "minhash_lsh_dups",
+    "semdedup_eval_metrics",
+    "semdedup_clusters",
+    "user_value_trend",
+    "benchmark_decontam",
+    "streaming_dedup_10min_counts",
+    "dedup_exact_groups",
+    "streaming_click_attribution",
+    "streaming_10min_counts",
+    "orders_per_customer",
+    "corpus_keep_list",
+    "media_metadata_stats",
+    "media_feature_extract",
+    "media_resize_plan",
+    "media_frame_sample",
+    "media_format_rollup",
+    "doc_fingerprint_rolling",
+)
+_TAIL: tuple[str, ...] = (
+    "dataset_split_assignment",
+    "content_sample",
+    "doc_repetition_stats",
+    "source_quality_profile",
+    "user_event_pivot",
+    "fuzzy_name_match",
+    "embedding_norm_stats",
+    "doc_quality_stats",
+    "lang_id_heuristic",
+    "stratified_sample_hash",
+    "sample_n_per_group",
+    "cdc_orders_upsert",
+    "dq_expectations",
+    "events_sliding_windows",
+    "events_gapfill_zero",
+    "segment_reconciliation_fullouter",
+    "loyal_buyer_intersect",
+    "dedup_survivors_by_quality",
+    "corpus_mix_allocation",
+    "events_rolling_1h",
+    "key_skew_profile",
+    "priority_segment_union",
+    "active_buildings_semi",
+    "streaming_sessions_tws",
+    "session_overlap_topk",
+    "user_running_stats",
+    "local_supplier_revenue",
+    "quantity_band_stats",
+    "events_variant_stats",
+    "copurchase_sssp",
+    "copurchase_triangles",
+    "copart_pairs_topk",
+    "basket_association_rules",
+    "ann_cosine_topk",
+    "simhash_near_dups",
+    "hll_distinct_users",
+    "duplicate_span_pairs",
+    "bpe_merge_candidates",
+    "weighted_sample_tokens",
+    "user_state_asof",
+    "paragraph_scrub_rebuild",
+    "minhash_eval_metrics",
+    "ngram_jaccard_thresholded",
+    "paragraph_dedup_stats",
+    "table_profile_orders",
+    "quality_decile_filter",
+    "user_retention_cohorts",
+    "training_shuffle_order",
+    "streaming_segment_purchase_totals",
+    "kmv_distinct_users",
+    "props_redaction_stats",
+    "event_funnel_conversion",
+    "event_transition_bigrams",
+    "incremental_priority_rollup",
+    "corpus_build_manifest",
+    "event_value_anomalies",
+    "embedding_label_centroids",
+    "shipping_lag_stats",
+    "packed_training_rows",
+    "ann_lsh_topk",
+    "ann_ivf_det_topk",
+    "cm_sketch_heavy_hitters",
+    "bloom_filter_prune",
+    "user_state_scd2",
+    "kmv_set_ops",
     "events_multires_distinct_rollup",
     "events_multires_distinct_incremental",
     "events_multires_distinct_realtime",
@@ -118,123 +235,6 @@ _HEAD: tuple[str, ...] = (
     "orders_by_month",
     "supplier_unpivot",
     "early_not_recent_buyers",
-)
-_TAIL: tuple[str, ...] = (
-    "brand_top2_parts",
-    "user_running_stats_salted",
-    "inverted_index_postings",
-    "doc_chunk_windows",
-    "embedding_int8_quant",
-    "pricing_summary",
-    "revenue_topk",
-    "customers_without_orders",
-    "order_basket_lookup",
-    "nation_customer_sorted",
-    "asof_last_purchase",
-    "events_10min_windows",
-    "dedup_clusters",
-    "parts_above_brand_avg",
-    "doc_embedding_profile",
-    "supplier_part_facts",
-    "events_hourly",
-    "order_price_quantiles",
-    "region_rollup",
-    "token_pack_assignment",
-    "media_byte_histogram",
-    "token_count_bpe",
-    "doc_rarity_scores",
-    "tfidf_top_terms",
-    "part_expr_catalog",
-    "events_cube",
-    "pagerank_coparts",
-    "peak_concurrent_sessions",
-    "events_multires_rollup",
-    "event_value_histogram",
-    "user_sessions",
-    "events_json_stats",
-    "minhash_lsh_dups",
-    "semdedup_eval_metrics",
-    "semdedup_clusters",
-    "user_value_trend",
-    "benchmark_decontam",
-    "streaming_dedup_10min_counts",
-    "dedup_exact_groups",
-    "streaming_click_attribution",
-    "streaming_10min_counts",
-    "orders_per_customer",
-    "corpus_keep_list",
-    "media_metadata_stats",
-    "media_feature_extract",
-    "media_resize_plan",
-    "media_frame_sample",
-    "media_format_rollup",
-    "doc_fingerprint_rolling",
-    "dataset_split_assignment",
-    "content_sample",
-    "doc_repetition_stats",
-    "source_quality_profile",
-    "user_event_pivot",
-    "fuzzy_name_match",
-    "embedding_norm_stats",
-    "doc_quality_stats",
-    "lang_id_heuristic",
-    "stratified_sample_hash",
-    "sample_n_per_group",
-    "cdc_orders_upsert",
-    "dq_expectations",
-    "events_sliding_windows",
-    "events_gapfill_zero",
-    "segment_reconciliation_fullouter",
-    "loyal_buyer_intersect",
-    "dedup_survivors_by_quality",
-    "corpus_mix_allocation",
-    "events_rolling_1h",
-    "key_skew_profile",
-    "priority_segment_union",
-    "active_buildings_semi",
-    "streaming_sessions_tws",
-    "session_overlap_topk",
-    "user_running_stats",
-    "local_supplier_revenue",
-    "quantity_band_stats",
-    "copurchase_bfs_l3",
-    "events_variant_stats",
-    "copurchase_sssp",
-    "copurchase_triangles",
-    "copart_pairs_topk",
-    "basket_association_rules",
-    "ann_cosine_topk",
-    "simhash_near_dups",
-    "hll_distinct_users",
-    "duplicate_span_pairs",
-    "bpe_merge_candidates",
-    "weighted_sample_tokens",
-    "user_state_asof",
-    "paragraph_scrub_rebuild",
-    "minhash_eval_metrics",
-    "ngram_jaccard_thresholded",
-    "paragraph_dedup_stats",
-    "table_profile_orders",
-    "quality_decile_filter",
-    "user_retention_cohorts",
-    "training_shuffle_order",
-    "streaming_segment_purchase_totals",
-    "kmv_distinct_users",
-    "props_redaction_stats",
-    "event_funnel_conversion",
-    "event_transition_bigrams",
-    "incremental_priority_rollup",
-    "corpus_build_manifest",
-    "event_value_anomalies",
-    "embedding_label_centroids",
-    "shipping_lag_stats",
-    "packed_training_rows",
-    "ann_lsh_topk",
-    "ann_ivf_det_topk",
-    "cm_sketch_heavy_hitters",
-    "bloom_filter_prune",
-    "user_state_scd2",
-    "kmv_set_ops",
 )
 
 

@@ -16,8 +16,9 @@ connection instead of killing it, matching a long-running service's
 contract.
 
 Scale posture: the service is a thin driver-side frontend — each request
-runs the fully distributed BFS (``operators/graph.py``) and collects only
-the bounded result graph, exactly like the reference master collecting
+runs the fully distributed BFS (``operators/graph.py``), then fetches the
+budget-bounded result edges with one collect and orders the reply on the
+driver (``graph_export.fetch``), like the reference master gathering the
 worker replies. Threaded handlers are safe because SparkSession actions
 are thread-safe; concurrent requests simply become concurrent Spark jobs
 sharing the cached edge table.

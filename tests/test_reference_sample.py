@@ -2,7 +2,9 @@
 (read-only at /root/reference/src/master/InputFiles/): the engine must
 serve the reference's exact interactive query surface on its exact input.
 
-Skipped cleanly if the reference tree isn't present.
+The reference-sample cases skip cleanly if the reference tree isn't
+present. The socket-service tests also run over the in-repo ``imdb_dir``
+fixture (tests/conftest.py), so the paper's workload is always under test.
 """
 
 from __future__ import annotations
@@ -14,23 +16,37 @@ from pyspark.sql import functions as F
 
 INPUT = "/root/reference/src/master/InputFiles"
 
-pytestmark = pytest.mark.skipif(
+needs_reference = pytest.mark.skipif(
     not os.path.isdir(INPUT), reason="reference sample data not available"
 )
 
 
 @pytest.fixture(scope="module")
-def engine(spark):
+def engine(request, spark):
+    """The reference-sample engine (skips without the reference tree), or,
+    when a test parametrizes it with ``"imdb_dir"``, the in-repo fixture."""
     from imdb_mapreduce_spark.api import ImdbEngine
 
-    eng = ImdbEngine.from_tsv(
-        spark,
-        f"{INPUT}/basic1000.tsv",
-        f"{INPUT}/principals1000.tsv",
-        f"{INPUT}/names1000.tsv",
-    )
+    if getattr(request, "param", "reference") == "imdb_dir":
+        d = request.getfixturevalue("imdb_dir")
+        files = (f"{d}/basics.tsv", f"{d}/principals.tsv", f"{d}/names.tsv")
+    elif os.path.isdir(INPUT):
+        files = (
+            f"{INPUT}/basic1000.tsv",
+            f"{INPUT}/principals1000.tsv",
+            f"{INPUT}/names1000.tsv",
+        )
+    else:
+        pytest.skip("reference sample data not available")
+    eng = ImdbEngine.from_tsv(spark, *files)
     yield eng
     eng.unpersist()
+
+
+# The socket-service tests run on both engines, the in-repo one first.
+on_both_engines = pytest.mark.parametrize(
+    "engine", ["imdb_dir", "reference"], indirect=True
+)
 
 
 def test_ingest_counts(engine, spark):
@@ -47,6 +63,7 @@ def test_ingest_counts(engine, spark):
     assert n <= 3589
 
 
+@needs_reference
 def test_headerless_names_fully_loaded(spark):
     # The reference's loader silently drops its first person, D.W. Griffith
     # (dataInit.erl:83-84). Ours must keep all 847 data rows (the file has
@@ -120,6 +137,7 @@ def test_save_load_roundtrip(engine, spark, tmp_path):
     assert eng2.cast_edges.count() == engine.cast_edges.count()
 
 
+@on_both_engines
 def test_service_round_trip_matches_in_process_request(engine):
     """The socket service must return byte-identical results to the
     in-process API, keep serving after an invalid request (reference GUI
@@ -200,6 +218,7 @@ def test_service_round_trip_matches_in_process_request(engine):
         srv.server_close()
 
 
+@on_both_engines
 def test_service_concurrent_clients_interleaved(engine):
     """VERDICT r04 item 8: the reference master serves concurrent GUI
     clients via per-request spawn (master.erl handle_call); the TCP twin

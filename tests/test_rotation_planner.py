@@ -124,10 +124,16 @@ def test_planner_matches_the_landed_r15_rotation():
     policy are one. Queries registered in FUTURE rounds are excluded
     from the replay (they did not exist when r15 was planned). The
     r15 never-green trio (the erasure-incremental pair + the IVF index
-    erasure) IS part of the replay: it existed at planning time."""
+    erasure) IS part of the replay: it existed at planning time.
+
+    The replay's registry order is the one the r15 rotation committed
+    (R15_HEAD first, then registration order), not the live
+    ``all_queries()`` order: every later rotation paste reorders the
+    live registry, and the planner breaks staleness ties by registry
+    order."""
     import glob
 
-    from imdb_mapreduce_spark.plans.registry import all_queries
+    from imdb_mapreduce_spark.plans.registry import _REGISTRY, all_queries
 
     paths = [
         p
@@ -139,7 +145,9 @@ def test_planner_matches_the_landed_r15_rotation():
     newest = plan_rotation.newest_green_rounds(paths)
     qs = all_queries()
     known_at_r15 = set(R15_HEAD) | set(newest)
-    order = [n for n in qs if n in known_at_r15]
+    r15_order = [n for n in R15_HEAD if n in qs]
+    r15_order += [n for n in _REGISTRY if n not in R15_HEAD]
+    order = [n for n in r15_order if n in known_at_r15]
     if set(R15_HEAD) - set(order):
         pytest.skip("r15 queries renamed/removed — replay no longer applies")
     head, _tail, _notes = plan(
